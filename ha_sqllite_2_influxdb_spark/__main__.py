@@ -11,9 +11,10 @@ Differences by design (all Spark-first):
 - the scan is a partitioned parallel read, not one cursor;
 - rendering/transform are Catalyst column expressions, not per-row
   Python;
-- writers run per-partition after a ``repartitionByRange`` on event
-  time, preserving the reference's oldest-first ordering PER WRITER
-  (ORDER BY, :89-90) without a global sort;
+- the scan ranges are the writers, one per task (``defaultParallelism``,
+  sized by ``SPARK_GRAFT_CPUS``): each partition is sorted oldest-first
+  on event time in place, preserving the reference's ordering PER
+  WRITER (ORDER BY, :89-90) with no shuffle and no global sort;
 - the incremental boundary comes from the reference's own probe — a
   Flux oldest-point query against the sink (:54-69, here a stdlib POST
   to /api/v2/query) — unless ``BOUNDARY_TS`` (epoch seconds) overrides
@@ -73,10 +74,9 @@ def main(env=None) -> int:
     spark = get_spark("ha_sqllite_2_influxdb")
     try:
         pts = migration_points(spark, cfg.sqlite_db, boundary_ts=boundary)
-        # oldest-first per writer (reference ORDER BY, :89-90)
-        ordered = pts.repartitionByRange(
-            max(2, spark.sparkContext.defaultParallelism // 4), "ts_epoch"
-        ).sortWithinPartitions("ts_epoch")
+        # oldest-first per writer (reference ORDER BY, :89-90); the scan
+        # partitions are the writers, so no exchange precedes the sink
+        ordered = pts.sortWithinPartitions("ts_epoch")
         lines = line_protocol(ordered, raw_state=F.col("state_raw"))
         if sink_path:
             write_lines(lines, path=sink_path, batch_size=cfg.batch_size,

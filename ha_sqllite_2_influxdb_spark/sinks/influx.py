@@ -20,9 +20,10 @@ Spark-first split of that work:
   reference's per-point error-isolation mode (:148-153).
 
 At 100 TB the rendering stage scales like any projection; the writer's
-parallelism is the partition count, so ``repartitionByRange(ts)`` before
-the write both spreads sink load and preserves the reference's
-oldest-first ordering *per writer* (ORDER BY, :89-90) without a global
+parallelism is the partition count. The CLI feeds the SQLite scan
+ranges straight in — one range per task, one writer per range — with
+each partition sorted oldest-first in place, preserving the reference's
+ordering *per writer* (ORDER BY, :89-90) with no shuffle and no global
 sort.
 """
 

@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import sqlite3
 from collections.abc import Iterator
+from contextlib import closing
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -68,7 +69,7 @@ def _affinity_to_spark(decl: str):
             return t
     # NUMERIC affinity / no declared type: SQLite would store anything;
     # surface as string (lossless) and let the caller cast
-    return StringType() if d else StringType()
+    return StringType()
 
 
 #: predicate ops accepted by ``read_table`` — simple comparisons only
@@ -106,7 +107,7 @@ def _compile_predicate(
 
 def table_schema(db_path: str, table: str) -> StructType:
     """Spark schema for a SQLite table from its declared column types."""
-    with sqlite3.connect(f"file:{db_path}?mode=ro", uri=True) as conn:
+    with closing(sqlite3.connect(f"file:{db_path}?mode=ro", uri=True)) as conn:
         info = conn.execute(f'PRAGMA table_info("{table}")').fetchall()
     if not info:
         raise ValueError(f"sqlite table not found: {table}")
@@ -126,10 +127,13 @@ def read_table(
 ) -> DataFrame:
     """Parallel partitioned scan of one SQLite table.
 
-    Ranges split ``rowid`` evenly — for an HA recorder DB rowid order is
-    insert order, which correlates with ``last_updated_ts``, so range
-    partitions are also roughly time-ordered (good for the downstream
-    ``repartitionByRange`` the sink wants).
+    Ranges split ``rowid`` evenly, one range per task by construction:
+    the range frame is ``spark.range(0, n, 1, n)`` and task ``i`` scans
+    range ``i``, so the scan needs no exchange and every core gets an
+    equal slice. For an HA recorder DB rowid order is insert order, which
+    correlates with ``last_updated_ts``, so the ranges are also roughly
+    time-ordered; the CLI uses them directly as its sink writers, each
+    sorted oldest-first within its own partition.
     """
     full = table_schema(db_path, table)
     if columns is None:
@@ -144,7 +148,7 @@ def read_table(
         predicate, {f.name for f in full.fields}
     )
 
-    with sqlite3.connect(f"file:{db_path}?mode=ro", uri=True) as conn:
+    with closing(sqlite3.connect(f"file:{db_path}?mode=ro", uri=True)) as conn:
         where = f" WHERE {frag}" if frag else ""
         lo_hi = conn.execute(
             f'SELECT min(rowid), max(rowid) FROM "{table}"{where}', params
@@ -152,9 +156,11 @@ def read_table(
     if lo_hi is None or lo_hi[0] is None:
         return spark.createDataFrame([], schema)
     lo, hi = lo_hi
-    n = min(num_partitions, hi - lo + 1)
-    step = (hi - lo + 1 + n - 1) // n
-    ranges = [(lo + i * step, min(lo + (i + 1) * step - 1, hi))
+    span = hi - lo + 1
+    n = min(num_partitions, span)
+    # range i is [lo + i*span//n, lo + (i+1)*span//n): sizes differ by at
+    # most one rowid and none is empty
+    ranges = [(lo + i * span // n, lo + (i + 1) * span // n - 1)
               for i in range(n)]
 
     sel = ", ".join(f'"{c}"' for c in columns)
@@ -163,14 +169,15 @@ def read_table(
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for r_lo, r_hi in zip(pdf["lo"], pdf["hi"]):
-                with sqlite3.connect(f"file:{db_path}?mode=ro",
-                                     uri=True) as conn:
+            for i in pdf["id"]:
+                r_lo, r_hi = ranges[int(i)]
+                with closing(sqlite3.connect(f"file:{db_path}?mode=ro",
+                                             uri=True)) as conn:
                     cur = conn.execute(
                         f'SELECT {sel} FROM "{table}"'
                         " WHERE rowid BETWEEN ? AND ?"
                         f"{pred}",
-                        [int(r_lo), int(r_hi), *params],
+                        [r_lo, r_hi, *params],
                     )
                     while True:
                         rows = cur.fetchmany(10_000)
@@ -178,10 +185,7 @@ def read_table(
                             break
                         yield pd.DataFrame(rows, columns=names)
 
-    ranges_df = spark.createDataFrame(ranges, "lo long, hi long").repartition(
-        len(ranges), "lo"
-    )
-    return ranges_df.mapInPandas(scan, schema)
+    return spark.range(0, n, 1, n).mapInPandas(scan, schema)
 
 
 def read_ha_recorder(

@@ -3,6 +3,9 @@ the end-to-end migration pipeline over a real recorder-shaped .db file.
 Ground truth is sqlite3 itself (same engine the reference reads with)."""
 
 import json
+import os
+import re
+import shutil
 import sqlite3
 
 import pytest
@@ -82,6 +85,11 @@ def test_partitioned_scan_complete(spark, recorder_db):
     assert rows[0].attributes_id is None
     assert rows[7].attributes_id is None
     assert rows[3].last_updated_ts == 1700000000.0 + 3 * 60.0
+    # one rowid range per task by construction: every core gets a slice
+    # and the slices differ by at most one row (contiguous rowids)
+    sizes = df.rdd.glom().map(len).collect()
+    assert len(sizes) == 4 and min(sizes) > 0, sizes
+    assert max(sizes) - min(sizes) <= 1, sizes
 
 
 def test_column_pruning_and_pushdown(spark, recorder_db):
@@ -272,6 +280,68 @@ def test_cli_main_boundary_ts_override_skips_probe(spark, recorder_db):
         "INFLUXDB_TOKEN": "t", "INFLUXDB_ORG": "o", "INFLUXDB_BUCKET": "b",
         "BOUNDARY_TS": "not-a-float",
     }) == 1
+
+
+def test_cli_file_sink_per_writer_order(spark, recorder_db, tmp_path):
+    """The CLI's sink contract (O1): every writer emits oldest-first, one
+    writer per scan range, and the written line set equals the direct
+    rendering. Timestamps are reversed against rowid order here, so a
+    scan-order write would fail the per-writer check."""
+    from pyspark.sql import functions as F
+
+    from ha_sqllite_2_influxdb_spark.__main__ import main
+    from ha_sqllite_2_influxdb_spark.sinks.influx import line_protocol
+
+    db = str(tmp_path / "reversed.db")
+    shutil.copy(recorder_db, db)
+    conn = sqlite3.connect(db)
+    conn.execute("UPDATE states SET last_updated_ts = "
+                 f"1700000000.0 + ({N_STATES - 1} - state_id) * 60.0")
+    conn.commit()
+    conn.close()
+    cutoff = 1700000000.0 + 400 * 60.0
+    sink = str(tmp_path / "sink")
+    rc = main({
+        "SQLITE_DB": db,
+        "INFLUXDB_URL": "http://unused",
+        "INFLUXDB_TOKEN": "t", "INFLUXDB_ORG": "o", "INFLUXDB_BUCKET": "b",
+        "SINK_PATH": sink,
+        "BOUNDARY_TS": str(cutoff),
+    })
+    assert rc == 0
+    parts = sorted(p for p in os.listdir(sink) if p.startswith("part-")
+                   and p.endswith(".lp"))
+    ranges = src.read_ha_recorder(
+        spark, db, boundary_ts=cutoff)["states"].rdd.getNumPartitions()
+    assert len(parts) == ranges > 1
+    written = []
+    for p in parts:
+        with open(os.path.join(sink, p)) as f:
+            lines = f.read().splitlines()
+        ts = [int(ln.rsplit(" ", 1)[1]) for ln in lines]
+        assert ts == sorted(ts), p
+        written.extend(lines)
+    want = [
+        r.line for r in line_protocol(
+            src.migration_points(spark, db, boundary_ts=cutoff),
+            raw_state=F.col("state_raw"),
+        ).collect()
+    ]
+    assert sorted(written) == sorted(want)
+    assert len(want) == 400 * 4 // 5
+
+
+def test_migration_sort_has_no_shuffle(spark, recorder_db):
+    """The CLI's pre-sink plan: scan ranges → broadcast joins → a
+    per-partition sort. The only exchanges left are the two broadcasts."""
+    from tests.test_plans import explain_str
+
+    df = src.migration_points(spark, recorder_db) \
+        .sortWithinPartitions("ts_epoch")
+    df.collect()
+    final = explain_str(df).split("== Initial Plan ==")[0]
+    exchanges = re.findall(r"(\w*)Exchange", final)
+    assert exchanges and set(exchanges) == {"Broadcast"}, final
 
 
 def test_cli_main_fails_fast_on_missing_config(capsys):
